@@ -2573,8 +2573,9 @@ def _doremi_oracle(rounds: int = 10, eta: float = 0.5,
             SELECT source, n_docs, mean_loss,
                    n_docs::DOUBLE /
                        (SELECT sum(n_docs)::DOUBLE FROM stats) AS u,
-                   round(mean_loss -
-                         (SELECT min(mean_loss) FROM stats), 9) AS lam
+                   coalesce(round(mean_loss -
+                         (SELECT min(mean_loss) FROM stats), 9), 0.0)
+                       AS lam
             FROM stats
         ),
         r0 AS (SELECT source, n_docs, mean_loss, u, lam, u AS a

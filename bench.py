@@ -7,7 +7,8 @@ documents table, plus a set of representative queries from
 __spark_entry__. Config via env:
 
   SPARK_GRAFT_SF_DIR   input dir   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local cores (default 32)
+  SPARK_GRAFT_CPUS     local cores (default: every core of the host)
+  SPARK_DRIVER_MEMORY  driver heap (default: half the host's RAM, <= 16g)
   BENCH_MULTIPLIER     pages per seed doc (default 4 → 20k pages at sf0.1)
 
 The two-parallelism scaling evidence (BASELINE.md: N vs 4N executors →
@@ -24,12 +25,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# allocation rate grows with core count; an 8g heap at 32 cores spends
-# more CPU in GC than in the pipeline kernels (measured 2x total-CPU
-# inflation vs 8 cores). 16g keeps GC off the critical path without
-# paying tens of GB of fresh-heap page-zeroing per JVM (-Xms pins it).
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+from pii_extract_base_spark.config import host_cores  # noqa: E402
+
+CPUS = host_cores()
 MULTIPLIER = int(os.environ.get("BENCH_MULTIPLIER", "64"))
 N_TRIALS = int(os.environ.get("BENCH_TRIALS", "5"))
 

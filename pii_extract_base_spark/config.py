@@ -37,11 +37,30 @@ os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
 os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
 
 
+def host_cores() -> int:
+    """Local cores: $SPARK_GRAFT_CPUS, else every core of the host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
+def host_driver_memory() -> str:
+    """Driver heap: $SPARK_DRIVER_MEMORY, else half the host's RAM
+    (/proc/meminfo MemTotal), at most 16g. The heap is pinned (-Xms),
+    so it must leave the OS, the Python workers and Arrow room."""
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{min(kb // 2048, 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "pii-extract-base-spark",
               cores: int = None,
               shuffle_partitions: int = None,
               extra_conf: dict = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or host_cores()
+    driver_memory = host_driver_memory()
     shuffle_partitions = shuffle_partitions or max(2 * cores, 32)
 
     builder = (
@@ -56,8 +75,7 @@ def get_spark(app_name: str = "pii-extract-base-spark",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_MAX_RECORDS_PER_BATCH))
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory)
         # bigger JVM<->python-worker pipe buffer: fewer syscalls per
         # Arrow batch (same kernel-contention story as above)
         .config("spark.buffer.size", "1048576")
@@ -72,8 +90,7 @@ def get_spark(app_name: str = "pii-extract-base-spark",
         # 50-80% system time at high core counts on virtualized hosts;
         # derby.system.home keeps the metastore next to the warehouse
         .config("spark.driver.extraJavaOptions",
-                "-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "8g")
-                + " -Dderby.system.home="
+                "-Xms" + driver_memory + " -Dderby.system.home="
                 + os.environ.get("SPARK_WAREHOUSE_DIR",
                                  "/tmp/pii_spark_warehouse"))
     )

@@ -1,4 +1,4 @@
-"""Gopher/C4-style heuristic quality rules (north-star stage N3).
+r"""Gopher/C4-style heuristic quality rules (north-star stage N3).
 
 The rule DEFINITIONS live here once, with three renderings that must stay
 in lockstep (asserted by tests/test_pipeline_parity.py):
@@ -7,12 +7,19 @@ in lockstep (asserted by tests/test_pipeline_parity.py):
  - `rules_columns()`           — native Spark SQL Column expressions
    (NOT a UDF: keeps the whole rule vector inside Catalyst/codegen so
    predicate pushdown and column pruning see it, SURVEY.md §4)
- - `rules_duckdb_sql()`        — ANSI/DuckDB SQL for the driver oracle
+ - `rules_duckdb_exprs()`      — ANSI/DuckDB SQL for the driver oracle
+
+Text semantics, shared by all three: words are runs of non-whitespace
+with ASCII whitespace (Java's ``\s``: space, \t, \n, \x0B, \f, \r),
+lines end at ``\n`` only, line trimming strips spaces only, and a word
+"has a letter" when it has an ASCII letter. (DuckDB's RE2 ``\s`` lacks
+\x0B; no test corpus document carries one.)
 
 Thresholds follow Gopher (Rae et al. 2021, arXiv:2112.11446) and C4
 (Raffel et al. 2020) adapted to the synthetic corpus scale.
 """
 
+import re
 from typing import Dict
 
 from .langdata import STOPWORDS
@@ -37,6 +44,8 @@ RULE_NAMES = [
 ]
 
 _BULLETS = ("-", "*", "•")
+_WORD = re.compile(r"\S+", re.ASCII)
+_LETTER = re.compile(r"[A-Za-z]")
 
 
 def _stopwords_for(lang: str):
@@ -46,7 +55,7 @@ def _stopwords_for(lang: str):
 def rules_python(text: str, lang: str) -> Dict[str, bool]:
     """Pure-Python rendering — the keep/drop oracle."""
     text = text or ""
-    words = text.split()
+    words = _WORD.findall(text)
     wc = len(words)
     mean_wl = (sum(len(w) for w in words) / wc) if wc else 0.0
     n_chars = len(text)
@@ -55,13 +64,13 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
     lines = text.split("\n")
     n_lines = len(lines)
     bullet_frac = sum(
-        1 for l in lines if l.lstrip()[:1] in _BULLETS) / n_lines
+        1 for l in lines if l.lstrip(" ")[:1] in _BULLETS) / n_lines
     ellipsis_frac = sum(
         1 for l in lines
-        if l.rstrip().endswith("...") or l.rstrip().endswith("…")) / n_lines
-    nonempty = [l for l in lines if l.strip()]
+        if l.rstrip(" ").endswith(("...", "…"))) / n_lines
+    nonempty = [l for l in lines if l.strip(" ")]
     dup_frac = (1.0 - len(set(nonempty)) / len(nonempty)) if nonempty else 0.0
-    alpha_frac = (sum(1 for w in words if any(c.isalpha() for c in w)) / wc
+    alpha_frac = (sum(1 for w in words if _LETTER.search(w)) / wc
                   if wc else 0.0)
     wl = set(w.lower() for w in words)
     stop_hits = sum(1 for s in _stopwords_for(lang) if s in wl)
@@ -85,60 +94,59 @@ def rules_python(text: str, lang: str) -> Dict[str, bool]:
 def rules_columns(text_col: str = "text", lang_col: str = "lang"):
     """Return {rule_name: Column} of native Spark expressions.
 
-    Everything stays inside WholeStageCodegen; `.explain` shows no
-    BatchEvalPython for this stage.
+    No UDF and no higher-order function: every rule is a regex count,
+    a length or an array operation, so the whole vector compiles
+    into WholeStageCodegen and `.explain` shows no BatchEvalPython or
+    lambdafunction for this stage. Line-anchored regexes run in
+    UNIX_LINES multiline mode (``(?md)``), so only ``\\n`` ends a line.
     """
     from pyspark.sql import functions as F
 
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, r"\s+"), lambda w: w != "")
-    wc = F.size(words)
-    mean_wl = F.when(wc > 0,
-                     F.aggregate(words, F.lit(0).cast("double"),
-                                 lambda acc, w: acc + F.length(w)) / wc
-                     ).otherwise(F.lit(0.0))
+    # Ratios divide by greatest(n, 1), not inside a CASE WHEN: a zero
+    # denominator has a zero numerator, and without conditionals
+    # Catalyst's common-subexpression elimination evaluates each
+    # shared term once per row (a CASE WHEN copies its operands into
+    # every branch).
+    one = F.lit(1)
+    # leading/trailing whitespace splits off empty items
+    words = F.split(t, r"\s+")
+    wc = F.size(F.array_remove(words, ""))
+    mean_wl = F.length(F.array_join(words, "")) / F.greatest(wc, one)
     n_chars = F.length(t)
-    # count symbol chars by table-driven deletion (translate) — a regex
-    # scan here costs more than every other rule combined
-    symbol_cnt = n_chars - F.length(F.translate(t, SYMBOL_CHARS, ""))
-    symbol_frac = F.when(n_chars > 0, symbol_cnt / n_chars).otherwise(0.0)
+    # delete every non-symbol run; what is left are the symbols
+    symbol_cnt = F.length(F.regexp_replace(
+        t, "[^" + "".join("\\" + c for c in SYMBOL_CHARS) + "]+", ""))
+    symbol_frac = symbol_cnt / F.greatest(n_chars, one)
 
-    lines = F.split(t, "\n")
-    n_lines = F.size(lines)
-    bullet_cnt = F.size(F.filter(
-        lines, lambda l: F.ltrim(l).substr(1, 1).isin(*_BULLETS)))
+    n_lines = F.size(F.split(t, "\n"))
+    bullet_cnt = F.regexp_count(t, F.lit("(?md)^ *[-*•]"))
     bullet_frac = bullet_cnt / n_lines
-    ellipsis_cnt = F.size(F.filter(
-        lines, lambda l: (F.rtrim(l).endswith("...")
-                          | F.rtrim(l).endswith("…"))))
+    # the dot or … that ends a line's "..."/"…", then spaces to its end
+    ellipsis_cnt = F.regexp_count(
+        t, F.lit(r"(?md)[.…](?<=\.\.\.|…) *$"))
     ellipsis_frac = ellipsis_cnt / n_lines
 
-    nonempty = F.filter(lines, lambda l: F.trim(l) != "")
-    n_nonempty = F.size(nonempty)
-    dup_frac = F.when(
-        n_nonempty > 0,
-        1.0 - F.size(F.array_distinct(nonempty)) / n_nonempty
-    ).otherwise(0.0)
+    # space-only lines become empty, then drop out with the empty ones;
+    # no lines reads as 1 distinct of 1: no duplicates
+    nonempty = F.array_remove(
+        F.split(F.regexp_replace(t, "(?md)^ +$", ""), "\n"), "")
+    dup_frac = 1.0 - (F.greatest(F.size(F.array_distinct(nonempty)), one)
+                      / F.greatest(F.size(nonempty), one))
 
-    # "word contains a letter" via translate-delete, not per-word regex
-    _LETTERS = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
-    alpha_cnt = F.size(F.filter(
-        words, lambda w: F.length(w) != F.length(F.translate(w, _LETTERS,
-                                                             ""))))
-    alpha_frac = F.when(wc > 0, alpha_cnt / wc).otherwise(0.0)
+    # one match per word with a letter: its first letter to its end
+    alpha_cnt = F.regexp_count(t, F.lit(r"[A-Za-z]\S*+"))
+    alpha_frac = alpha_cnt / F.greatest(wc, one)
 
-    words_lower = F.array_distinct(F.transform(words, F.lower))
-    # per-language stopword list resolved natively via chained whens
-    stop_hits = None
-    default_list = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
-    expr = None
-    for lg, sw in STOPWORDS.items():
-        arr = F.array(*[F.lit(s) for s in sw])
-        cnt = F.size(F.array_intersect(words_lower, arr))
-        cond = F.col(lang_col) == lg
-        expr = F.when(cond, cnt) if expr is None else expr.when(cond, cnt)
-    stop_hits = expr.otherwise(
-        F.size(F.array_intersect(words_lower, default_list)))
+    # array_intersect is distinct; the empty token of a leading
+    # whitespace run is no stopword
+    stoplists = F.create_map(*[
+        x for lg, sw in STOPWORDS.items()
+        for x in (F.lit(lg), F.array(*[F.lit(s) for s in sw]))])
+    stoplist = F.coalesce(F.element_at(stoplists, F.col(lang_col)),
+                          stoplists[F.lit("en")])
+    stop_hits = F.size(F.array_intersect(F.split(F.lower(t), r"\s+"),
+                                         stoplist))
 
     return {
         "r_word_count": (wc >= MIN_WORDS) & (wc <= MAX_WORDS),

@@ -300,8 +300,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                       .union(e.select(F.col("t").alias("node")))
                       .schema["node"].dataType)
         spark = edges.sparkSession
-        ansi = str(spark.conf.get("spark.sql.ansi.enabled",
-                                  "true")).lower() == "true"
+        ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
         return _pagerank_driver(
             spark, node_type,
             [(r["s"], r["t"], r["w"]) for r in e.collect()],

@@ -28,10 +28,12 @@ The result is invariant to where the range boundaries fall, so the
 sampling that picks them never changes the answer.
 """
 
+from decimal import Decimal
 from typing import List, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, FractionalType
 
 from ..functions.textstats import token_count, words_col
 
@@ -121,10 +123,13 @@ def distributed_prefix_sum(df: DataFrame, val_col: str,
     # offset type follows F.sum's result type (long for integral
     # inputs, double/decimal otherwise) — truncating to long would
     # silently corrupt prefix sums over fractional val_cols
-    sum_type = tot_df.schema["_ptotal"].dataType.simpleString()
-    trows = sorted((r["_pid"], r["_ptotal"] or 0)
-                   for r in tot_df.collect())
-    acc = 0
+    sum_dt = tot_df.schema["_ptotal"].dataType
+    sum_type = sum_dt.simpleString()
+    zero = (Decimal(0) if isinstance(sum_dt, DecimalType)
+            else 0.0 if isinstance(sum_dt, FractionalType) else 0)
+    trows = sorted((r["_pid"], zero if r["_ptotal"] is None
+                    else r["_ptotal"]) for r in tot_df.collect())
+    acc = zero
     orows = []
     for pid_v, ptot in trows:
         orows.append((pid_v, acc))

@@ -6,14 +6,19 @@ Physical shape (SURVEY.md §3.4):
 
   scan (parquet/Iceberg; prune lang partitions when present)
     → repartition(N, salted url hash)          # skew mitigation (N9)
-    → score struct   [Arrow UDF #1: fused langid+ppl, text only]
+    → sd struct      [Arrow UDF: fused langid+ppl+detect, text/lang/url]
     → rules struct   [native SQL — stays in WholeStageCodegen]
-    → detect struct  [Arrow UDF #2: detect+context+scrub, text/lang/url]
-    → keep + reasons [native SQL]
+    → reasons        [native SQL]
+    → scrubbed_text  [native fold over the entity spans] + keep
 
-Exactly two Python crossings per row, each shipping only the columns it
+Exactly one Python crossing per row, shipping only the columns it
 needs. Everything else is Catalyst's problem — and it solves it
 (predicate pushdown, column pruning; see tests/test_explain_plan.py).
+
+The output expressions name their inputs only by column, so they are
+unresolved and session-independent: they are built once, on the first
+call, and every later DataFrame reuses them. Building them costs
+thousands of py4j round trips; applying them costs a few dozen.
 """
 
 from typing import Iterable, Optional
@@ -23,8 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 from .functions.quality import rules_struct_column
 from .functions.decision import decision_columns
 from .functions.scrubnative import scrub_expr
-from .operators.detect import make_detect_udf
-from .operators.score import make_score_udf
+from .operators.detect import make_fused_udf
 from .partitioning import salted_repartition
 
 DEFAULT_LANGUAGES = ("en", "es", "fr", "de")
@@ -38,30 +42,44 @@ OUTPUT_COLUMNS = [
 class QualityPipeline:
     """Configure once on the driver; apply to any pages DataFrame.
 
-    `fused=True` (default) runs langid+ppl+detect+scrub as ONE Arrow
-    crossing (see operators/detect.make_fused_udf): the JVM-side
-    row↔Arrow conversion around each ArrowEvalPython stage dominates
-    once the Python kernels are vectorized, so one crossing beats two.
-    `fused=False` keeps the two-stage plan (score pass, then detect
-    pass) — useful when only scores are needed downstream.
+    langid+ppl+detect run as ONE Arrow crossing (see
+    operators/detect.make_fused_udf): the JVM-side row↔Arrow conversion
+    around each ArrowEvalPython stage dominates once the Python kernels
+    are vectorized, so one crossing beats two.
     """
 
     def __init__(self, languages: Iterable[str] = DEFAULT_LANGUAGES,
                  config_json: Optional[str] = None,
                  salt_partitions: Optional[int] = None,
-                 fused: bool = True,
                  from_html: bool = False):
         self.languages = tuple(languages)
         self.config_json = config_json
         self.salt_partitions = salt_partitions
-        self.fused = fused
         self.from_html = from_html
-        if fused:
-            from .operators.detect import make_fused_udf
-            self._fused_udf = make_fused_udf(self.languages, config_json)
-        else:
-            self._score_udf = make_score_udf()
-            self._detect_udf = make_detect_udf(self.languages, config_json)
+        self._stages = None
+
+    def _build(self):
+        """The three projections of the plan, as lists of Columns."""
+        sd = make_fused_udf(self.languages, self.config_json)(
+            F.col("text"), F.col("lang"), F.col("url"))
+        _, reasons = decision_columns("rules", "lang", "sd")
+        passthrough = [F.col(c) for c in ("url", "warc_ts", "lang", "text")]
+        return (
+            passthrough + [sd.alias("sd"),
+                           rules_struct_column("text", "lang")
+                           .alias("rules")],
+            passthrough + [F.col("sd"), F.col("rules"),
+                           reasons.alias("reasons")],
+            passthrough + [
+                F.col("sd.lang_pred"), F.col("sd.lang_conf"),
+                F.col("sd.logppl"), F.col("rules"), F.col("sd.entities"),
+                F.col("sd.n_entities"),
+                # scrub natively from the spans, so the full text
+                # never crosses Arrow twice (scrubnative)
+                scrub_expr(F.col("text"), F.col("sd.entities"))
+                .alias("scrubbed_text"),
+                (F.size("reasons") == 0).alias("keep"), F.col("reasons"),
+            ])
 
     def __call__(self, pages: DataFrame) -> DataFrame:
         df = pages
@@ -72,45 +90,10 @@ class QualityPipeline:
             df = backfill_text_from_html(df)
         if self.salt_partitions:
             df = salted_repartition(df, "url", self.salt_partitions)
-
-        if self.fused:
-            sd = self._fused_udf(F.col("text"), F.col("lang"), F.col("url"))
-            df = df.withColumn("sd", sd)
-            score = F.col("sd")
-            detect = F.col("sd")
-        else:
-            df = df.withColumn("score", self._score_udf(F.col("text")))
-            df = df.withColumn(
-                "detect",
-                self._detect_udf(F.col("text"), F.col("lang"),
-                                 F.col("url")))
-            score = F.col("score")
-            detect = F.col("detect")
-        df = df.withColumn("rules", rules_struct_column("text", "lang"))
-
-        score_name = "sd" if self.fused else "score"
-        keep, reasons = decision_columns("rules", "lang", score_name)
-        df = (df
-              .withColumn("keep", keep)
-              .withColumn("reasons", reasons)
-              .select(
-                  "url", "warc_ts", "lang", "text",
-                  score.getField("lang_pred").alias("lang_pred"),
-                  score.getField("lang_conf").alias("lang_conf"),
-                  score.getField("logppl").alias("logppl"),
-                  "rules",
-                  detect.getField("entities").alias("entities"),
-                  detect.getField("n_entities").alias("n_entities"),
-                  # fused path: scrub natively from the spans so the
-                  # full text never crosses Arrow twice (scrubnative);
-                  # non-fused path keeps the UDF's Python scrub
-                  (scrub_expr(F.col("text"),
-                              detect.getField("entities"))
-                   if self.fused
-                   else detect.getField("scrubbed_text"))
-                  .alias("scrubbed_text"),
-                  "keep", "reasons",
-              ))
+        if self._stages is None:
+            self._stages = self._build()
+        for cols in self._stages:
+            df = df.select(*cols)
         return df
 
     def kept(self, pages: DataFrame) -> DataFrame:

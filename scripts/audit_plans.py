@@ -379,7 +379,7 @@ def main():
     print(f"{'✓' if hash_ok else '✗ MISSING'} map-side-combinable "
           "`HashAggregate` (long minima, no sort)\n")
 
-    # pipeline: show the two ArrowEvalPython stages and their inputs
+    # pipeline: show the single ArrowEvalPython stage and its inputs
     from pii_extract_base_spark.pipeline import QualityPipeline
     from pii_extract_base_spark.sources.pages import synth_pages
     out = QualityPipeline()(synth_pages(spark, SF_DIR))

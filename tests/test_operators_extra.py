@@ -1018,6 +1018,31 @@ def test_distributed_prefix_sum_and_shards(spark):
     assert m[1].first_doc == 3 and m[1].last_doc == 3
 
 
+def test_distributed_prefix_sum_fractional(spark):
+    """Fractional val_cols keep their sum type end to end: the driver
+    offsets start at the type's zero (a zero-total bucket included),
+    so double and decimal prefix sums equal the sequential cumsum."""
+    from decimal import Decimal
+    from pii_extract_base_spark.operators.sharding import (
+        distributed_prefix_sum)
+    # quarters are exact in binary; the first half sums to 0.0
+    vals = [(i, 0.0 if i < 100 else (i % 9) * 0.25) for i in range(200)]
+    for typ, conv in (("double", float),
+                      ("decimal(10,2)", lambda v: Decimal(f"{v:.2f}"))):
+        df = spark.createDataFrame([(k, conv(v)) for k, v in vals],
+                                   f"k long, v {typ}")
+        for nparts in (1, 3):
+            out = distributed_prefix_sum(df, "v", "k",
+                                         num_partitions=nparts)
+            assert type(out.schema["cum"].dataType) \
+                is type(df.schema["v"].dataType)
+            got = {r.k: r.cum for r in out.collect()}
+            run = conv(0.0)
+            for k, v in vals:
+                run += conv(v)
+                assert got[k] == run, (typ, nparts, k)
+
+
 def test_bloom_prune_antijoin(spark):
     """Bloom membership has no false negatives, and the bloom-pruned
     anti-join returns exactly the plain anti-join's rows — including

@@ -128,3 +128,93 @@ def test_entities_present_for_injected_classes(results):
             assert "<TOXIC>" in row.scrubbed_text
         checked.add(cls)
     assert {1, 2, 3, 4, 5, 6, 8} <= checked
+
+
+# Each text bites on one place where the text semantics (ASCII
+# whitespace, "\n"-only lines, space-only trimming, ASCII letters; see
+# functions/quality.py) could differ between the renderings.
+RULE_EDGE_TEXTS = [
+    # CRLF: a "\r" line is not blank, so these lines are duplicates
+    "The cat and the dog\r\nare in the house\r\n" + "\r\n" * 5
+    + "of the world today and more words here ok fine",
+    "the\tcat\tand\tthe\tdog\tof\tin\tto\t" * 3,                 # tabs
+    "   \n   \n  \nthe cat is in the house of the world and some more "
+    "words to pass\n   \n",                                # space-only lines
+    "  - item one\n  * item two\n • item three\n-x\n\t- tab bullet\n"
+    "the and of to in",                                # indented bullets
+    "wait for it... \nand then… \nmore... \nstop...\r\nthe and of in the "
+    "words here ok ok ok ok ok ok",                    # trailing spaces
+    "...\n…\n....\n. . .\n",
+    "the\xa0cat\xa0and\xa0the\xa0dog of in to " * 3,             # NBSP
+    "123 456 789 !!! ??? the and of 1 2 3 4 5 6 7 8 9 0 a",  # no letters
+    "ÉTÉ été é ñ ü the and of " * 3,                   # non-ASCII letters
+    "THE AND OF TO IN IS IT THAT " * 3,                # upper-case stopwords
+    "a\x0bb\x0cc d e f g h i j k l m n o p q r",         # \v and \f
+    "x" * 13 + " " + "y" * 13,
+    "line\nline\nline\nline\nother\n",
+    "",
+    None,
+]
+
+
+def test_rules_edge_cases_match_python(spark):
+    from pii_extract_base_spark.functions.quality import (
+        RULE_NAMES, rules_columns, rules_python)
+    rows = [(i, t, lang) for i, t in enumerate(RULE_EDGE_TEXTS)
+            for lang in ("en", "fr", "xx", None)]
+    cols = rules_columns("text", "lang")
+    got = (spark.createDataFrame(rows, "i int, text string, lang string")
+           .select("i", "text", "lang",
+                   *[cols[n].alias(n) for n in RULE_NAMES])
+           .orderBy("i", "lang").collect())
+    assert len(got) == len(rows)
+    for r in got:
+        assert {n: r[n] for n in RULE_NAMES} == \
+            rules_python(r.text, r.lang), (r.text, r.lang)
+
+
+def test_rules_struct_has_no_lambda(spark):
+    """The rules vector is HOF-free: no lambda runs outside codegen."""
+    from pii_extract_base_spark.functions.quality import rules_struct_column
+    df = spark.createDataFrame([("x", "en")], "text string, lang string")
+    analyzed = (df.select(rules_struct_column("text", "lang"))
+                ._jdf.queryExecution().analyzed().toString())
+    assert "lambdafunction" not in analyzed.lower(), analyzed
+
+
+def _pages_slices(spark, n=30):
+    pages = synth_pages(spark, SF_DIR).where("url is not null")
+    return (pages.orderBy("url").limit(n),
+            pages.orderBy(pages.url.desc()).limit(n))
+
+
+def test_pipeline_reused_across_dataframes(spark):
+    """One pipeline applied to two DataFrames returns what fresh
+    instances return."""
+    a, b = _pages_slices(spark)
+    pipe = QualityPipeline(DEFAULT_LANGUAGES)
+    by_url = lambda df: sorted(df.collect(), key=lambda r: r.url)
+    reused = [by_url(pipe(df)) for df in (a, b)]
+    fresh = [by_url(QualityPipeline(DEFAULT_LANGUAGES)(df)) for df in (a, b)]
+    assert reused == fresh
+    assert not {r.url for r in reused[0]} & {r.url for r in reused[1]}
+
+
+def test_pipeline_second_call_py4j_traffic(spark, monkeypatch):
+    """Applying a built pipeline costs a few dozen py4j round trips,
+    not the thousands that building the expression tree takes."""
+    import py4j.clientserver as cs
+    a, b = _pages_slices(spark)
+    pipe = QualityPipeline(DEFAULT_LANGUAGES)
+    pipe(a)
+    calls = []
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    pipe(b)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 100, len(calls)
