@@ -115,10 +115,8 @@ def main() -> int:
         (synth_pages(spark, SF_DIR, repartition=64, multiplier=MULTIPLIER)
          .write.mode("overwrite").parquet(pages_pq))
 
-    # explicit repartitioning happens at ingest; salting-by-url
-    # (partitioning.salted_repartition) is the policy for skewed
-    # production layouts — the synth layout is uniform, so a plain
-    # round-robin to 2 partitions/core suffices.
+    # explicit repartitioning happens at ingest; the synth layout is
+    # uniform, so a plain round-robin to 2 partitions/core suffices.
     pages = spark.read.parquet(pages_pq).repartition(2 * CPUS)
     pipe = QualityPipeline()
     # median of 3 trials: this sandbox's virtualized kernel injects

@@ -2,9 +2,10 @@
 
 `process_page` is a pure function — the per-row contract, mirroring the
 reference's raw-chunk API (detect_chunk, reference api/processor.py:215-258,
-SURVEY.md §3.3). The Spark stage wraps it in an Arrow pandas UDF; the
-oracle calls it directly. Byte-identical scrubbed text between engine and
-oracle holds by construction.
+SURVEY.md §3.3). The pipeline's fused Arrow UDF runs it with scrubbing
+off and rebuilds the scrub natively from the spans (functions/scrubnative,
+byte parity pinned by tests/test_scrubnative.py); the oracle calls it
+directly.
 
 The detector registry is NOT broadcast as pickled objects: executors
 rebuild it once per (languages, config) via a module-level cache —
@@ -30,9 +31,6 @@ ENTITY_STRUCT = ("struct<type:string,subtype:string,value:string,"
                  "start:long,end:long,lang:string,country:string,"
                  "detector:int,method:string,stage:string>")
 
-DETECT_RESULT_SCHEMA = (f"struct<entities:array<{ENTITY_STRUCT}>,"
-                        f"scrubbed_text:string,n_entities:int>")
-
 _PROC_CACHE: Dict[tuple, PiiProcessor] = {}
 
 
@@ -48,22 +46,13 @@ def get_processor(languages: Tuple[str, ...],
     return proc
 
 
-def process_page(proc: PiiProcessor, text: str, lang: str,
-                 url: str, do_scrub: bool = True) -> Tuple[List[Dict], str]:
-    """Detect entities on one page and scrub them. Returns
-    (entity dicts with ENTITY_FIELDS, scrubbed text — or None when
-    ``do_scrub`` is off: the fused pipeline rebuilds the scrub
-    NATIVELY from the spans, so the Python copy would be dead work)."""
-    text = text or ""
-    chunk = DocumentChunk(id="0", data=text)
-    piic = PiiCollectionBuilder(lang=lang, docid=url)
-    proc.detect_chunk(chunk, piic, default_lang=lang)
-
-    ents = []
+def entity_rows(piic: PiiCollectionBuilder):
+    """Yield (detector, entity dict with ENTITY_FIELDS) for every PII
+    instance a chunk detection collected."""
     for p in piic:
         d = p.asdict()
         det = piic.get_detector(d["detector"])
-        ents.append({
+        yield det, {
             "type": d["type"],
             "subtype": d.get("subtype"),
             "value": d["value"],
@@ -74,7 +63,20 @@ def process_page(proc: PiiProcessor, text: str, lang: str,
             "detector": d["detector"],
             "method": det.method,
             "stage": d.get("process", {}).get("stage"),
-        })
+        }
+
+
+def process_page(proc: PiiProcessor, text: str, lang: str,
+                 url: str, do_scrub: bool = True) -> Tuple[List[Dict], str]:
+    """Detect entities on one page and scrub them. Returns
+    (entity dicts with ENTITY_FIELDS, scrubbed text — or None when
+    ``do_scrub`` is off: the fused pipeline rebuilds the scrub
+    NATIVELY from the spans, so the Python copy would be dead work)."""
+    text = text or ""
+    chunk = DocumentChunk(id="0", data=text)
+    piic = PiiCollectionBuilder(lang=lang, docid=url)
+    proc.detect_chunk(chunk, piic, default_lang=lang)
+    ents = [row for _, row in entity_rows(piic)]
 
     if not do_scrub:
         return ents, None
@@ -94,30 +96,6 @@ def detect_batch(texts, langs, urls, languages: Tuple[str, ...],
         scrubbed.append(sc)
         counts.append(len(ents))
     return all_ents, scrubbed, counts
-
-
-def make_detect_udf(languages: Tuple[str, ...],
-                    config_json: Optional[str] = None):
-    """Arrow pandas UDF (Series×3 → struct). Only (text, lang, url) cross
-    the JVM↔Python boundary — Catalyst prunes every other column out of
-    the Arrow transfer."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    langs_t = tuple(languages)
-
-    @pandas_udf(DETECT_RESULT_SCHEMA)
-    def detect_udf(text: pd.Series, lang: pd.Series,
-                   url: pd.Series) -> pd.DataFrame:
-        ents, scrubbed, counts = detect_batch(
-            text.tolist(), lang.tolist(), url.tolist(), langs_t, config_json)
-        return pd.DataFrame({
-            "entities": ents,
-            "scrubbed_text": scrubbed,
-            "n_entities": counts,
-        })
-
-    return detect_udf
 
 
 # NOTE: no scrubbed_text — the pipeline rebuilds it NATIVELY from the
@@ -197,15 +175,11 @@ def make_chunk_detect_udf(languages: Tuple[str, ...],
     def chunk_udf(chunk_id: pd.Series, text: pd.Series,
                   before: pd.Series, after: pd.Series,
                   lang: pd.Series, docid: pd.Series) -> pd.DataFrame:
-        proc_cache = {}
+        proc = get_processor(langs_t, config_json)
         all_ents, scrubbed, counts = [], [], []
         for cid, t, bf, af, lg, did in zip(
                 chunk_id.tolist(), text.tolist(), before.tolist(),
                 after.tolist(), lang.tolist(), docid.tolist()):
-            proc = proc_cache.get(lg)
-            if proc is None:
-                proc = get_processor(langs_t, config_json)
-                proc_cache[lg] = proc
             t = t or ""
             ctx = {}
             if bf is not None:
@@ -217,19 +191,11 @@ def make_chunk_detect_udf(languages: Tuple[str, ...],
             piic = PiiCollectionBuilder(lang=lg, docid=did)
             proc.detect_chunk(chunk, piic, default_lang=lg)
             ents = []
-            for p in piic:
-                d = p.asdict()
-                det = piic.get_detector(d["detector"])
-                ents.append({
-                    "type": d["type"], "subtype": d.get("subtype"),
-                    "value": d["value"], "start": d["start"],
-                    "end": d["end"], "lang": d.get("lang"),
-                    "country": d.get("country"),
-                    "detector_key": "|".join(
-                        str(k or "") for k in det.key()),
-                    "method": det.method,
-                    "stage": d.get("process", {}).get("stage"),
-                })
+            for det, row in entity_rows(piic):
+                del row["detector"]
+                row["detector_key"] = "|".join(
+                    str(k or "") for k in det.key())
+                ents.append(row)
             spans = [(e["start"], e["end"], e["type"]) for e in ents]
             all_ents.append(ents)
             scrubbed.append(scrub_text(t, spans))

@@ -1,10 +1,11 @@
 """Partitioning & skew policy (north-star N9).
 
-At 100 TB the hazard is long-document skew: a few 1 MB pages in a
-partition of 1 KB pages stall its executor. Policy:
+At 100 TB the hazards are a hot join key and long-document skew (a
+few 1 MB pages in a partition of 1 KB pages stall its executor).
+Policy:
 
- - repartition on a SALTED key: xxhash64(url) pmod S — uniform,
-   deterministic, decouples layout from any hot url prefix
+ - a hot join key is spread over S reducers by ``salted_join``, on a
+   SALTED key: xxhash64(col) pmod S — uniform, deterministic
  - AQE handles residual skew at shuffle boundaries
    (spark.sql.adaptive.skewJoin / coalescePartitions, on in config.py)
  - Arrow batches are row-capped in config.py; the detect/score UDFs do
@@ -18,16 +19,6 @@ from pyspark.sql import DataFrame, functions as F
 def salted_key(col: str, buckets: int):
     """Deterministic uniform bucket id from a string key."""
     return F.pmod(F.xxhash64(F.col(col)), F.lit(buckets))
-
-
-def salted_repartition(df: DataFrame, col: str, num_partitions: int,
-                       salt_factor: int = 4) -> DataFrame:
-    """Spread by hashed key with a salt factor so a single hot key value
-    cannot own a whole partition."""
-    buckets = num_partitions * salt_factor
-    return (df.withColumn("_salt", salted_key(col, buckets))
-              .repartition(num_partitions, "_salt")
-              .drop("_salt"))
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,

@@ -5,7 +5,6 @@ detect + scrub → keep/drop, as one declarative DataFrame plan.
 Physical shape (SURVEY.md §3.4):
 
   scan (parquet/Iceberg; prune lang partitions when present)
-    → repartition(N, salted url hash)          # skew mitigation (N9)
     → sd struct      [Arrow UDF: fused langid+ppl+detect, text/lang/url]
     → rules struct   [native SQL — stays in WholeStageCodegen]
     → reasons        [native SQL]
@@ -29,7 +28,6 @@ from .functions.quality import rules_struct_column
 from .functions.decision import decision_columns
 from .functions.scrubnative import scrub_expr
 from .operators.detect import make_fused_udf
-from .partitioning import salted_repartition
 
 DEFAULT_LANGUAGES = ("en", "es", "fr", "de")
 
@@ -49,13 +47,9 @@ class QualityPipeline:
     """
 
     def __init__(self, languages: Iterable[str] = DEFAULT_LANGUAGES,
-                 config_json: Optional[str] = None,
-                 salt_partitions: Optional[int] = None,
-                 from_html: bool = False):
+                 config_json: Optional[str] = None):
         self.languages = tuple(languages)
         self.config_json = config_json
-        self.salt_partitions = salt_partitions
-        self.from_html = from_html
         self._stages = None
 
     def _build(self):
@@ -83,13 +77,6 @@ class QualityPipeline:
 
     def __call__(self, pages: DataFrame) -> DataFrame:
         df = pages
-        if self.from_html:
-            # shared ingestion backfill (functions/htmlextract —
-            # codegen, no UDF; NULL-text rows only, see its docstring)
-            from .functions.htmlextract import backfill_text_from_html
-            df = backfill_text_from_html(df)
-        if self.salt_partitions:
-            df = salted_repartition(df, "url", self.salt_partitions)
         if self._stages is None:
             self._stages = self._build()
         for cols in self._stages:

@@ -49,3 +49,11 @@ def arrow_eval_inputs(plan: str) -> list:
             plan):
         out.append(re.findall(r"(\w+)#\d+", m.group(1)))
     return out
+
+
+def arrow_eval_udfs(plan: str) -> list:
+    """Result columns (one per hosted Python UDF) of each
+    ArrowEvalPython stage."""
+    return [re.findall(r"pythonUDF\d+", m.group(1)) for m in
+            re.finditer(r"\(\d+\) ArrowEvalPython\s*\nInput [^\n]*\n"
+                        r"Arguments: ([^\n]*)", plan)]

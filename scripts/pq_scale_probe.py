@@ -41,7 +41,7 @@ def main() -> int:
     from pii_extract_base_spark.config import get_spark
     from pii_extract_base_spark.operators.cluster import kmeans_grouped
 
-    spark = get_spark(app_name="pq_scale_probe", cores=32)
+    spark = get_spark(app_name="pq_scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")

@@ -142,12 +142,10 @@ def main() -> int:
 
     # --from-html backfill must run BEFORE the curation stages: the
     # text-rewriting stages (--dedup-spans/--dedup-lines) coalesce
-    # NULL text to '', which would defeat QualityPipeline's
-    # NULL-only backfill predicate and process html-only pages with
-    # empty text (or, pre-fix, drop them outright). Same shared
-    # helper the pipeline applies, so single-stage results are
-    # unchanged — curation stages simply see the recovered text too,
-    # which is what dedup/ppl selection should operate on.
+    # NULL text to '', which would defeat the backfill's NULL-only
+    # predicate and process html-only pages with empty text. The
+    # curation stages then see the recovered text too, which is what
+    # dedup/ppl selection should operate on.
     if args.from_html:
         from pii_extract_base_spark.functions.htmlextract import (
             backfill_text_from_html)
@@ -349,8 +347,7 @@ def main() -> int:
         pages = (sp.where(F.col("split") == args.split_keep)
                    .drop("split", "_host"))
 
-    pipe = QualityPipeline(tuple(args.languages.split(",")),
-                           from_html=args.from_html)
+    pipe = QualityPipeline(tuple(args.languages.split(",")))
 
     def _pack_stats(scored, writer_dir=None):
         """Pack the kept pages' scrubbed text into SEQ_LEN-token

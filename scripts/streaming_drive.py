@@ -2,10 +2,9 @@
 """At-scale Structured Streaming drive of the quality pipeline.
 
 Evidence script for the streaming checklist row: drains the full
-synthetic pages corpus through the SAME stage functions the batch
-pipeline uses (streaming/quality_stream.py), as a checkpointed
-availableNow file-source stream split into multiple microbatches,
-then
+synthetic pages corpus through the batch job's own QualityPipeline
+(streaming/quality_stream.py), as a checkpointed availableNow
+file-source stream split into multiple microbatches, then
 
   1. checks exact per-(window, lang, keep) parity of the streaming
      windowed aggregation against the identical batch plan over the
@@ -61,7 +60,7 @@ def main() -> int:
     from pii_extract_base_spark.streaming.quality_stream import (
         apply_pipeline_stream, windowed_keep_counts)
 
-    spark = get_spark(app_name="streaming_drive", cores=32)
+    spark = get_spark(app_name="streaming_drive")
     spark.sparkContext.setLogLevel("ERROR")
 
     tag = Path(SF_DIR).name

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from pii_extract_base_spark.plans import (
     formatted_plan, count_nodes, scan_read_schemas, pushed_filters,
-    arrow_eval_inputs)
+    arrow_eval_inputs, arrow_eval_udfs)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -52,20 +52,25 @@ def test_ivf_broadcasts_centroids(spark):
 
 
 def test_pipeline_single_arrow_crossing(spark):
-    """Fused pipeline: exactly ONE ArrowEvalPython stage, shipping only
-    (text, lang, url) — never html/warc_ts (column pruning into the
-    UDF input)."""
+    """Fused pipeline: exactly ONE ArrowEvalPython stage hosting ONE
+    Python UDF, shipping only (text, lang, url) — never html/warc_ts
+    (column pruning into the UDF input). The streaming job's plan
+    (apply_pipeline_stream, here over a batch read) is the same plan."""
     from pii_extract_base_spark.pipeline import QualityPipeline
     from pii_extract_base_spark.sources.pages import synth_pages
-    out = QualityPipeline()(synth_pages(spark, SF_DIR))
-    plan = formatted_plan(out)
-    inputs = arrow_eval_inputs(plan)
-    assert len(inputs) == 1, plan[:800]
-    # `html` is referenced nowhere downstream → pruned before the UDF
-    # stage entirely (warc_ts legitimately passes through: the output
-    # schema carries it, but it is not a UDF argument)
-    flat = {c for cols in inputs for c in cols}
-    assert "html" not in flat, inputs
+    from pii_extract_base_spark.streaming.quality_stream import (
+        apply_pipeline_stream)
+    pages = synth_pages(spark, SF_DIR)
+    for out in (QualityPipeline()(pages), apply_pipeline_stream(pages)):
+        plan = formatted_plan(out)
+        inputs = arrow_eval_inputs(plan)
+        assert len(inputs) == 1, plan[:800]
+        assert [len(u) for u in arrow_eval_udfs(plan)] == [1], plan[:1200]
+        # `html` is referenced nowhere downstream → pruned before the
+        # UDF stage entirely (warc_ts legitimately passes through: the
+        # output schema carries it, but it is not a UDF argument)
+        flat = {c for cols in inputs for c in cols}
+        assert "html" not in flat, inputs
 
 
 def test_textstats_native_no_python(spark):

@@ -78,13 +78,16 @@ def test_sql_rendering_parity(spark):
 
 
 def test_pipeline_from_html_backfill(spark):
-    """QualityPipeline(from_html=True): rows with NULL text get the
+    """backfill_text_from_html ahead of QualityPipeline (as
+    `run_pipeline --from-html` runs it): rows with NULL text get the
     extracted html text; rows with text keep it untouched."""
+    from pii_extract_base_spark.functions.htmlextract import (
+        backfill_text_from_html)
     from pii_extract_base_spark.pipeline import QualityPipeline
     pages = synth_pages(spark, SF_DIR).limit(20)
     nulled = pages.withColumn(
         "text", F.when(F.crc32("url") % 2 == 0, F.col("text")))
-    out = QualityPipeline(("en",), from_html=True)(nulled)
+    out = QualityPipeline(("en",))(backfill_text_from_html(nulled))
     rows = out.select("url", "text").collect()
     src = {r["url"]: r["text"] for r in pages.collect()}
     n_backfilled = 0

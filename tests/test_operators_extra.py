@@ -1,5 +1,7 @@
 """Multimodal plumbing, dedup operators, similarity recall, streaming."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,7 +119,8 @@ def test_lsh_bucket_topk_recall(spark):
 
 
 def test_streaming_pipeline(spark, tmp_path):
-    from pii_extract_base_spark.streaming.quality_stream import run_stream
+    from pii_extract_base_spark.streaming.quality_stream import (
+        apply_pipeline_stream, run_stream, windowed_keep_counts)
     pages_dir = str(tmp_path / "pages_in")
     # 200 docs = classes 0..19 (drop classes included)
     synth_pages(spark, SF_DIR).limit(200).write.parquet(pages_dir)
@@ -128,6 +131,11 @@ def test_streaming_pipeline(spark, tmp_path):
     rows = spark.sql("select * from qs_test").collect()
     assert sum(r.n_docs for r in rows) == 200
     assert any(r.keep for r in rows) and any(not r.keep for r in rows)
+    # stream-vs-batch parity: the same plan over the same parquet read
+    # as a batch gives the same windowed rows
+    batch = windowed_keep_counts(
+        apply_pipeline_stream(spark.read.parquet(pages_dir))).collect()
+    assert Counter(map(tuple, rows)) == Counter(map(tuple, batch))
 
 
 def test_collection_json_sink(spark, tmp_path):
